@@ -3,14 +3,14 @@
 The composed flagships (pipeline_refinedweb_corpus, dedup_incremental_admit,
 …) contain deliberate EAGER materialization barriers (localCheckpoint /
 persist-then-count stage boundaries). When a bench artifact moves, the first
-adjudication question is *which stage* — so `bench.py` activates this
-recorder around each timed run and records per-stage wall times into the
-BENCH JSON. Off by default: a plain query run pays one `is None` check per
-eagerly-materialized stage and nothing else.
+adjudication question is *which stage* — so the two benchmark harnesses
+turn this recorder on around their timed runs: `bench.py` records per-stage
+wall times into the BENCH JSON, and `perfbench/batch.py` reports them as the
+``pipeline.stage*`` per-layer metrics. Off by default: a plain query run pays
+one `is None` check per eagerly-materialized stage and nothing else.
 
-Not thread-safe by design (the bench harness is single-threaded); the sink
-is a plain module global so operators deep in the call stack need no
-plumbing.
+Not thread-safe by design (both harnesses are single-threaded); the sink is
+a plain module global so operators deep in the call stack need no plumbing.
 """
 
 from __future__ import annotations

@@ -24,6 +24,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """48 GB, or half the host's physical memory where that is less. The
+    collector grows the heap toward its maximum before it works hard, so a
+    maximum the host cannot back gets the driver killed by the OS instead of
+    collected."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(48 * 1024, phys_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "flink_1_12_0_src_spark",
     cpus: int | None = None,
@@ -45,7 +54,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.cbo.enabled", "true")
         .config("spark.sql.cbo.joinReorder.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
         # events.parquet stores TIMESTAMP(NANOS); Spark reads it as raw INT64 and

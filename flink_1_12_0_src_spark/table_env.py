@@ -51,6 +51,20 @@ _FS_METADATA_KEYS = {
 _KAFKA_METADATA_KEYS = {"topic", "partition", "offset", "timestamp", "timestamp-type"}
 
 
+def _holds_no_data_files(path: str | None) -> bool:
+    """True for a local directory with no data file anywhere under it (names
+    starting with ``_`` or ``.`` are markers and checksums, which Spark's
+    file listing skips too)."""
+    import os
+
+    root = (path or "").removeprefix("file:")
+    if not os.path.isdir(root):
+        return False
+    return not any(
+        not f.startswith(("_", ".")) for _d, _s, files in os.walk(root) for f in files
+    )
+
+
 class TableEnvironment:
     """Minimal TableEnvironment: in-memory catalog + Flink-dialect SQL."""
 
@@ -1076,7 +1090,13 @@ class TableEnvironment:
             )
         else:
             reader = self.spark.read.format(cfg["format"])
-            if tbl.schema_ddl and cfg["format"] in ("csv", "json"):
+            # text formats always scan with the declared schema; self-
+            # describing ones keep their file schema, except over a directory
+            # with no data yet, which then reads as an empty table instead of
+            # failing schema inference
+            if tbl.schema_ddl and (
+                cfg["format"] in ("csv", "json") or _holds_no_data_files(cfg["path"])
+            ):
                 reader = reader.schema(tbl.schema_ddl)
             for k, v in cfg["options"].items():
                 reader = reader.option(k, v)

@@ -51,3 +51,15 @@ def test_readme_census_covers_bench_and_gate_counts():
         f"README says {m and m.group(0)}, registry has {oracled} oracled — "
         f"run `python tools/census.py`"
     )
+
+
+def test_driver_contract_mirrors_registry():
+    """`__spark_entry__.queries()`/`oracle_sql()` are a thin adapter over the
+    registry: the same names, the same callables, the same oracle text."""
+    import __spark_entry__
+
+    reg = load_all()
+    assert __spark_entry__.queries() == {n: q.spark for n, q in reg.items()}
+    assert __spark_entry__.oracle_sql() == {
+        n: q.oracle for n, q in reg.items() if q.oracle is not None
+    }

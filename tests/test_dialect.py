@@ -258,49 +258,6 @@ def test_cep_bind_predicate_rejected_with_any_semantics():
         _scan_matches_all(pdf, pattern, order_by=["pos"], time_col=None)
 
 
-def test_gate_window_composition():
-    """The driver verifies only the first 50 load_all() entries per round.
-    Standing policy: fixed ex-reds lead (empty on zero-red rounds), then the
-    current round's new queries — no prior-green query occupies a slot while
-    anything unevidenced waits — and the no-oracle ANN trio (which can only
-    ever produce `no_oracle` rows) sits dead last, outside any window.
-    Imports the round-agnostic CURRENT_* aliases so the per-round tier
-    rename never requires editing this test."""
-    from flink_1_12_0_src_spark.queries import (
-        _DRIVER_GREEN,
-        _NO_ORACLE_LAST,
-        CURRENT_FIXED_FIRST,
-        CURRENT_NEW,
-        load_all,
-    )
-
-    names = list(load_all())
-    front = list(CURRENT_FIXED_FIRST) + list(CURRENT_NEW)
-    assert names[: len(front)] == front
-    # everything after the front tier and before the ANN trio is driver-green
-    # already — round 9 has zero unevidenced oracle-able queries waiting
-    unevidenced = [
-        n for n in names
-        if n not in _DRIVER_GREEN and n not in _NO_ORACLE_LAST and n not in front
-    ]
-    assert unevidenced == [], unevidenced
-    # the whole front tier fits the 50-slot window with room to spare, so
-    # the remaining slots re-verify greens and nothing defers this round
-    assert len(front) <= 50
-    assert set(names[len(front):50]) <= set(_DRIVER_GREEN)
-    # dead-last no-oracle tier — minus any member given a deliberate
-    # one-time presentation slot via an explicit CURRENT_NEW listing
-    # (round 14: knn_ivf_topk, r13 verdict task #8). At most one member may
-    # hold a front slot at a time (presentations are one-time, deliberate,
-    # and individually documented), and the guard on the slice keeps
-    # names[-0:] (the whole list) out of the assertion if ever all three
-    # were presented at once.
-    assert len([n for n in _NO_ORACLE_LAST if n in front]) <= 1
-    tail = [n for n in _NO_ORACLE_LAST if n not in front]
-    if tail:
-        assert names[-len(tail):] == tail
-
-
 def test_statement_set_multi_sink(spark, tmp_path):
     """StatementSet (TableEnvironment.createStatementSet / StatementSet.java):
     two INSERTs into different filesystem sinks buffer, then execute as one
@@ -331,6 +288,37 @@ def test_statement_set_multi_sink(spark, tmp_path):
 
     with pytest.raises(ValueError):
         ss.add_insert_sql("SELECT 1")
+
+
+def test_create_table_over_empty_parquet_dir(spark, tmp_path):
+    """CREATE TABLE over an existing but empty parquet directory scans with
+    the declared schema, so the table reads as empty instead of failing
+    schema inference; an INSERT then writes a file and refreshes the view."""
+    from flink_1_12_0_src_spark.table_env import TableEnvironment
+
+    env = TableEnvironment(spark)
+    path = tmp_path / "ev_empty"
+    path.mkdir()
+    env.execute_sql(f"""
+        CREATE TABLE ev_empty (
+            id BIGINT,
+            ts TIMESTAMP(3),
+            WATERMARK FOR ts AS ts - INTERVAL '5' SECOND
+        ) WITH (
+            'connector' = 'filesystem',
+            'path' = '{path}',
+            'format' = 'parquet'
+        )
+    """)
+    assert env.sql_query("SELECT * FROM ev_empty").count() == 0
+    spark.sql(
+        "SELECT id, TIMESTAMP '2020-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts "
+        "FROM range(3)"
+    ).createOrReplaceTempView("ev_empty_src")
+    env.execute_sql("INSERT INTO ev_empty SELECT * FROM ev_empty_src")
+    rows = env.sql_query("SELECT id, ts FROM ev_empty ORDER BY id").collect()
+    assert [r.id for r in rows] == [0, 1, 2]
+    assert str(rows[2].ts) == "2020-01-01 00:00:02"
 
 
 def test_tableapi_session_and_slide_windows(spark, sf_dir):
